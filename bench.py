@@ -115,6 +115,16 @@ def _bench_cdc_pipeline(spark, sf_dir: str) -> tuple[float, dict[str, float]]:
         shutil.rmtree(wd, ignore_errors=True)
 
 
+def _same_sf(steady_sf, bench_sf: str) -> bool:
+    """Whether BENCH_steady.json's recorded SF is the bench run's SF.
+    Compared as numbers: the record stores a float (1.0) while the
+    testdata directory suffix is text ("1")."""
+    try:
+        return float(steady_sf) == float(bench_sf)
+    except (TypeError, ValueError):
+        return False
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -410,7 +420,7 @@ def main() -> None:
         with open(os.path.join(_here, "BENCH_steady.json")) as fh:
             _steady_sf = json.load(fh).get("sf")
         _bench_sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-        if _steady_sf is not None and str(_steady_sf) != _bench_sf:
+        if _steady_sf is not None and not _same_sf(_steady_sf, _bench_sf):
             _steady_q = {}
     except (OSError, ValueError):
         pass

@@ -366,6 +366,17 @@ class WalStreamRunner(CdcStreamRunner):
       into the next batch's decoders — so the transaction's rows reach
       the raw table exactly once, at their commit, in commit order.
 
+    Each micro-batch is decoded ONCE. One scan of the WAL bytes (a
+    per-slot aggregate) yields the slots present, their Relation messages
+    and whether each opens a streamed segment; the decode itself is a
+    lazy local checkpoint. A slot can end with streamed state only if the
+    batch carries a StreamStart for it or it arrived with a carry, so the
+    `stream_state` harvest runs only then — an exact condition, not a
+    heuristic. On every other batch (all of them, for a feed without
+    streamed transactions) the decode runs inside the raw append's write
+    job and nothing re-reads the decoded block; a carrying batch decodes
+    in the harvest job and the sync reads the checkpointed block.
+
     Both are persisted per batch id under the raw directory
     (`_PG_DECODER_STATE/state_<batch_id>.json`, written atomically before
     the sync): after a crash, Structured Streaming replays the last
@@ -504,6 +515,8 @@ class WalStreamRunner(CdcStreamRunner):
         self._stream_states = blob.get("streams", {})
 
     def _foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        import json
+
         from peerdb_spark.sources.pgoutput import (
             STREAM_STATE_KIND,
             decode_pgoutput,
@@ -511,6 +524,22 @@ class WalStreamRunner(CdcStreamRunner):
 
         self._restore_decoder_state(batch_id)
         preamble = list(self._relation_cache.relation_messages.values())
+        # ONE scan of the WAL bytes for every driver-side fact the batch
+        # needs: the slots present (authoritative-carry bookkeeping), each
+        # slot's Relation ('R') messages for FUTURE batches (this batch's
+        # executors see them in-stream, in WAL order; collect_list drops
+        # the non-'R' nulls, so only the rare schema messages ride the
+        # collect), and whether the slot opens a streamed segment
+        # (StreamStart, 'S')
+        slot_rels = batch_df.groupBy("slot").agg(
+            F.collect_list(
+                F.when(F.expr("substring(payload, 1, 1) == X'52'"),
+                       F.struct("lsn", "payload"))
+            ).alias("rels"),
+            F.max(F.expr("substring(payload, 1, 1) == X'53'"))
+            .alias("stream_start"),
+        ).collect()
+        slots_in_batch = {r["slot"] for r in slot_rels}
         changelog = decode_pgoutput(
             batch_df, relation_preamble=preamble,
             stream_state=self._stream_states, on_incomplete="carry",
@@ -518,41 +547,35 @@ class WalStreamRunner(CdcStreamRunner):
             # {"state_file": ...} pointers flow through the driver, so a
             # giant open transaction never rides a collect
             state_dir=self._state_dir(),
-        ).localCheckpoint()  # decode once: state harvest + sync share it
-        # harvest carried streamed-transaction state (bounded: ≤1 row/slot).
-        # A slot ABSENT from this batch keeps its previous carry — its open
-        # transaction is still pending even though no decoder ran for it;
-        # a slot present in the batch either re-emits its state or consumed
-        # it (commit/abort), so the harvested rows are authoritative for
-        # exactly the slots that appeared.
-        import json as _json
-
-        carried = changelog.where(F.col("_kind") == STREAM_STATE_KIND).collect()
-        # ONE scan for both driver harvests (r12 — they were two separate
-        # full jobs costing ~1.3 s each per batch on a 200k-message batch):
-        # the slots present in this batch (authoritative-carry bookkeeping)
-        # and each slot's Relation ('R') messages for FUTURE batches (this
-        # batch's executors see them in-stream, in WAL order; collect_list
-        # drops the non-'R' nulls, so only the rare schema messages ride
-        # the collect)
-        slot_rels = batch_df.groupBy("slot").agg(
-            F.collect_list(
-                F.when(F.expr("substring(payload, 1, 1) == X'52'"),
-                       F.struct("lsn", "payload"))
-            ).alias("rels")
-        ).collect()
-        slots_in_batch = {r["slot"] for r in slot_rels}
+        ).localCheckpoint(eager=False)
+        # exact skip: only a StreamStart or an incoming carry leaves a
+        # decoder with streamed state (PgOutputDecoder.stream_state), so
+        # every other batch decodes once, inside the sync write
+        if any(r["stream_start"] or r["slot"] in self._stream_states
+               for r in slot_rels):
+            carried = changelog.where(
+                F.col("_kind") == STREAM_STATE_KIND).collect()
+        else:
+            carried = []
+        # harvested state is bounded (≤1 row/slot). A slot ABSENT from
+        # this batch keeps its previous carry — its open transaction is
+        # still pending even though no decoder ran for it; a slot present
+        # in the batch either re-emits its state or consumed it (commit/
+        # abort), so the harvested rows are authoritative for exactly the
+        # slots that appeared.
         states = {s: st for s, st in self._stream_states.items()
                   if s not in slots_in_batch}
         states.update(
-            {r["_src_table"]: _json.loads(r["_data"]) for r in carried})
+            {r["_src_table"]: json.loads(r["_data"]) for r in carried})
         self._stream_states = states
         rels = sorted((rr for r in slot_rels for rr in r["rels"]),
                       key=lambda rr: rr["lsn"])
         for r in rels:
             self._relation_cache.replay(bytes(r["payload"]))
-        # persist BEFORE the sink write: a crash inside sync replays this
-        # batch against state_{batch_id - 1}, which this write never touches
+        # persist BEFORE the sink write: a crash inside sync — including a
+        # decode failure, which on a non-carrying batch surfaces there —
+        # replays this batch against state_{batch_id - 1}, which this write
+        # never touches
         self._save_decoder_state(batch_id)
         super()._foreach_batch(
             changelog.where(F.col("_kind") != STREAM_STATE_KIND), batch_id

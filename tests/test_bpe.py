@@ -125,6 +125,38 @@ def test_bpe_encode_matches_python_reference(spark):
     assert not any(d == 2 for d, _ in got)
 
 
+def test_bpe_tokens_never_null_or_empty(spark):
+    """bpe_encode explodes the encoded vocab with explode_OUTER (a plain
+    explode lets Catalyst push an inferred filter down to the corpus scan),
+    which equals a plain explode only while no word encodes to a NULL or
+    empty tokens array. Pin that for both strategies, the empty word
+    included: it encodes to [''] and contributes one '' token row."""
+    from peerdb_spark.functions.bpe import bpe_encode, bpe_encode_words
+
+    words = ["", "a", "low", "lower", "newest"]
+    merges, ref_vocab = python_bpe({w: 1 for w in words}, k=4)
+    wdf = spark.createDataFrame([(w,) for w in words], "w string")
+    wc = spark.createDataFrame(
+        [(0, w, i + 1) for i, w in enumerate(words)],
+        "doc_id long, w string, n_w long",
+    )
+    want = Counter()
+    for i, w in enumerate(words):
+        for tok in ref_vocab[w] or [""]:
+            want[(0, tok)] += i + 1
+    for strategy in ("fold", "ranked"):
+        got = {
+            r["w"]: r["tokens"]
+            for r in bpe_encode_words(wdf, merges, strategy=strategy).collect()
+        }
+        assert got[""] == [""], strategy
+        assert all(toks for toks in got.values()), (strategy, got)
+        rows = bpe_encode(None, merges, word_counts=wc,
+                          strategy=strategy).collect()
+        assert all(r["token"] is not None for r in rows), strategy
+        assert {(r["doc_id"], r["token"]): r["n"] for r in rows} == dict(want)
+
+
 def test_bpe_encode_ranked_equals_fold_on_trained_tables(spark):
     """Property: the O(1)-plan-size ranked encoder (mapInPandas over a
     pair→rank dict) produces EXACTLY the chained-fold path's tokens for any

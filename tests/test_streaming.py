@@ -450,6 +450,156 @@ def test_wal_stream_state_survives_batches_without_the_slot(spark, tmp_path):
     assert got == [("1", "a-str"), ("2", "b-plain")]
 
 
+def test_wal_stream_carry_survives_plain_batches_on_the_slot(spark, tmp_path):
+    """The stream_state harvest runs when a slot in the batch opens a
+    streamed segment OR arrives with a carry. This pins the carry half:
+    slot A opens a stream in batch 1, batch 2 is plain v1 traffic on the
+    SAME slot (no StreamStart), batch 3 commits the stream. Skipping the
+    harvest on batch 2 would drop slot A's carry, and the streamed row
+    with it."""
+    from pyspark.sql import types as TT
+
+    from peerdb_spark.storage import ParquetTable
+    from peerdb_spark.streaming import WalStreamRunner
+    from tests.test_pgoutput import (
+        TS1,
+        enc_begin,
+        enc_commit,
+        enc_insert,
+        enc_relation,
+        enc_stream_commit,
+        enc_stream_start,
+        enc_stream_stop,
+        v2,
+    )
+
+    wal_dir = str(tmp_path / "wal")
+    dest = str(tmp_path / "items")
+    val = TT.StructType([TT.StructField("id", TT.StringType()),
+                         TT.StructField("v", TT.StringType())])
+
+    def write_chunk(msgs):
+        rows = [("A", lsn, bytes(p)) for lsn, p in msgs]
+        spark.createDataFrame(rows, WalStreamRunner.WAL_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(wal_dir)
+
+    runner = WalStreamRunner(
+        spark, wal_dir, str(tmp_path / "ckpt"),
+        [cdc.CdcTableConfig("public.items", ["id"], val, dest, n_buckets=2)],
+        str(tmp_path / "raw"), max_files_per_trigger=1,
+    )
+    # batch 1: the stream opens, buffers one row, and its segment closes
+    write_chunk([
+        (10, enc_relation(42, "public", "items", ["id", "v"], key_cols=("id",))),
+        (11, enc_stream_start(700)),
+        (12, v2(enc_insert(42, ["1", "a-str"]), 700)),
+        (13, enc_stream_stop()),
+    ])
+    runner.run_available()
+    # batch 2: a plain v1 transaction on the same slot, stream still open
+    write_chunk([
+        (20, enc_begin(9, TS1)),
+        (21, enc_insert(42, ["2", "a-plain"])),
+        (22, enc_commit(TS1)),
+    ])
+    runner.run_available()
+    t = ParquetTable(spark, dest, ["id"], 2)
+    assert [(r["id"], r["v"]) for r in t.read().collect()] == [("2", "a-plain")]
+    # batch 3: the stream commits
+    write_chunk([(30, enc_stream_commit(700, 10**15))])
+    runner.run_available()
+    runner.stop()
+    got = sorted((r["id"], r["v"]) for r in t.read().collect())
+    assert got == [("1", "a-str"), ("2", "a-plain")]
+
+
+def test_wal_stream_decode_failure_replays_from_previous_state(spark, tmp_path):
+    """On a batch without streamed state the decode runs inside the raw
+    append's write job. A corrupt pgoutput message there must still fail
+    the query with the decoder's error, leave the raw batch without its
+    commit marker, and a fresh runner over the same directories must
+    replay that batch from the decoder state saved by the batch before
+    (the batch holds no Relation message: only state_0 can decode it)."""
+    import glob
+
+    from pyspark.sql import types as TT
+
+    from peerdb_spark.storage import ParquetTable
+    from peerdb_spark.streaming import WalStreamRunner
+    from tests.test_pgoutput import (
+        TS1,
+        TS2,
+        enc_begin,
+        enc_commit,
+        enc_insert,
+        enc_relation,
+    )
+
+    wal_dir = str(tmp_path / "wal")
+    dest = str(tmp_path / "items")
+    val = TT.StructType([TT.StructField("id", TT.StringType()),
+                         TT.StructField("v", TT.StringType())])
+
+    def write_chunk(msgs, path):
+        rows = [("slot0", lsn, bytes(p)) for lsn, p in msgs]
+        spark.createDataFrame(rows, WalStreamRunner.WAL_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(path)
+
+    def mk():
+        return WalStreamRunner(
+            spark, wal_dir, str(tmp_path / "ckpt"),
+            [cdc.CdcTableConfig("public.items", ["id"], val, dest, n_buckets=2)],
+            str(tmp_path / "raw"), max_files_per_trigger=1,
+        )
+
+    write_chunk([
+        (10, enc_relation(42, "public", "items", ["id", "v"], key_cols=("id",))),
+        (11, enc_begin(1, TS1)),
+        (12, enc_insert(42, ["1", "a"])),
+        (13, enc_commit(TS1)),
+    ], wal_dir)
+    runner = mk()
+    runner.run_available()
+    good = [
+        (20, enc_begin(2, TS2)),
+        (21, enc_insert(42, ["2", "b"])),
+        (22, enc_insert(42, ["3", "c"])),
+        (23, enc_commit(TS2)),
+    ]
+    # the second insert is torn inside its tuple header
+    write_chunk(good[:2] + [(22, enc_insert(42, ["3", "c"])[:7])] + good[3:],
+                wal_dir)
+    with pytest.raises(Exception,
+                       match="ValueError: corrupt pgoutput message at lsn=22"):
+        runner.run_available()
+    runner.stop()
+    raw = runner.pipeline.raw
+    assert raw.is_batch_committed(0) and not raw.is_batch_committed(1)
+    # the failure came from the sync job: the decoder state for batch 1
+    # was already persisted, ahead of the sink write
+    assert os.path.exists(runner._state_path(1))
+
+    # re-fetch the torn file (the newest one): the same path now holds the
+    # intact bytes and their checksum sidecar, as a re-read of the WAL
+    # segment would
+    torn = max(glob.glob(os.path.join(wal_dir, "part-*")),
+               key=os.path.getmtime)
+    fixed = str(tmp_path / "fixed")
+    write_chunk(good, fixed)
+    (intact,) = glob.glob(os.path.join(fixed, "part-*"))
+    os.replace(intact, torn)
+    os.replace(os.path.join(fixed, f".{os.path.basename(intact)}.crc"),
+               os.path.join(wal_dir, f".{os.path.basename(torn)}.crc"))
+
+    runner2 = mk()
+    runner2.run_available()
+    runner2.stop()
+    assert raw.is_batch_committed(1)
+    t = ParquetTable(spark, dest, ["id"], 2)
+    got = sorted((r["id"], r["v"]) for r in t.read().collect())
+    assert got == [("1", "a"), ("2", "b"), ("3", "c")]
+
+
 def test_dedup_within_watermark_streaming(spark, tmp_path):
     """Native redelivery filter: duplicate event ids delivered twice in the
     stream collapse to one row; distinct ids all survive."""
