@@ -397,10 +397,6 @@ class CdcTableConfig:
     # SourceName/DestinationName/DestinationType)
     renames: dict[str, str] = field(default_factory=dict)  # src name -> dst name
     type_overrides: dict[str, str] = field(default_factory=dict)  # dst name -> spark ddl type
-    # merge physical strategy: 'agg' (default here — measured ~35% faster on
-    # the raw->normalize path: single exchange, inherent dedup, no window
-    # pass) or 'join' (see normalize.merge_changes for the trade-off)
-    merge_strategy: str = "agg"
     # a destination bucket whose row count crosses this splits in two after
     # the batch that grew it (storage.split_bucket — extendible hashing, only
     # the split bucket rewrites). Bounds per-batch merge reread as key
@@ -890,7 +886,6 @@ class CdcPipeline:
                 changes,
                 soft_delete_col=cfg.soft_delete_col,
                 synced_at_col=cfg.synced_at_col,
-                strategy=cfg.merge_strategy,
                 return_images=bool(views),
                 skew_salt=salt,
             )

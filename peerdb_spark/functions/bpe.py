@@ -399,6 +399,34 @@ def bpe_encode_words(
     return words.mapInPandas(batches, out_schema)
 
 
+def bpe_encode_word_counts(
+    wc: DataFrame, merges: list[tuple], strategy: str = "auto"
+) -> DataFrame:
+    """Word counts (..., w, n_w) → per-word exploded tokens (..., token, n_w):
+    one row per token of each counted word, carrying the word's count and
+    every other column of `wc`. The merges run over the distinct words only
+    (bpe_encode_words); the counts join the encoded vocab on `w`."""
+    # the merge folds are CPU-heavy per word (chained array folds); AQE
+    # coalesces the small distinct-word relation to 1-2 partitions, which
+    # serializes them — spread the vocab across the cluster first
+    n_part = wc.sparkSession.sparkContext.defaultParallelism
+    vocab = bpe_encode_words(
+        wc.select("w").distinct().repartition(n_part), merges, strategy=strategy
+    )
+    # explode_OUTER, deliberately (r13, found by the x10 probe): a plain
+    # explode lets InferFiltersFromGenerate derive `size(tokens) > 0 AND
+    # tokens IS NOT NULL` and push it through the distinct down to the
+    # corpus scan — re-evaluating the full merge-fold expression PER
+    # CORPUS ROW instead of per vocab row (measured 4.4 s vs 1.2 s at x10;
+    # the ranked kernel was immune only because mapInPandas is a pushdown
+    # barrier). tokens is never NULL or empty here (split() yields [''] on
+    # the empty word, the ranked kernel mirrors it), so outer == inner.
+    keep = [c for c in wc.columns if c not in ("w", "n_w")]
+    return wc.join(vocab, "w").select(
+        *keep, F.explode_outer("tokens").alias("token"), "n_w"
+    )
+
+
 def bpe_encode(
     df: DataFrame | None,
     merges: list[tuple],
@@ -424,22 +452,5 @@ def bpe_encode(
             .groupBy(id_col, "w")
             .agg(F.count(F.lit(1)).alias("n_w"))
         )
-    # the merge folds are CPU-heavy per word (chained array folds); AQE
-    # coalesces the small distinct-word relation to 1-2 partitions, which
-    # serializes them — spread the vocab across the cluster first
-    n_part = wc.sparkSession.sparkContext.defaultParallelism
-    vocab = bpe_encode_words(
-        wc.select("w").distinct().repartition(n_part), merges, strategy=strategy
-    )
-    # explode_OUTER, deliberately (r13, found by the x10 probe): a plain
-    # explode lets InferFiltersFromGenerate derive `size(tokens) > 0 AND
-    # tokens IS NOT NULL` and push it through the distinct down to the
-    # corpus scan — re-evaluating the full merge-fold expression PER
-    # CORPUS ROW instead of per vocab row (measured 4.4 s vs 1.2 s at x10;
-    # the ranked kernel was immune only because mapInPandas is a pushdown
-    # barrier). tokens is never NULL or empty here (split() yields [''] on
-    # the empty word, the ranked kernel mirrors it), so outer == inner.
-    per_word = wc.join(vocab, "w").select(
-        id_col, F.explode_outer("tokens").alias("token"), "n_w"
-    )
+    per_word = bpe_encode_word_counts(wc, merges, strategy=strategy)
     return per_word.groupBy(id_col, "token").agg(F.sum("n_w").alias("n"))

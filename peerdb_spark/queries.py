@@ -2968,24 +2968,16 @@ def q_bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wf = wc.groupBy("w").agg(F.sum("n_w").alias("freq"))
     merges, _ = bpe_train(None, "text", k=4, word_freqs=wf)
-    from peerdb_spark.functions.bpe import bpe_encode_words
-    # encode the DISTINCT vocab (bpe_encode_words, the fold kernel under
-    # test) and aggregate the GLOBAL counts straight off the exploded
-    # word counts: sum over docs of per-doc counts == sum of n_w per
-    # token occurrence, so the (doc_id, token) hash exchange the generic
-    # bpe_encode wrapper pays for its per-doc output is provably pure
-    # overhead for this global top-40 (§2.3 aggregate before you
-    # shuffle / §1.2 don't compute what you throw away; r13 A/B below,
-    # oracle hash-identical). The per-doc surface stays gated through
+    from peerdb_spark.functions.bpe import bpe_encode_word_counts
+    # encode the DISTINCT vocab and aggregate the GLOBAL counts straight
+    # off the exploded word counts: sum over docs of per-doc counts == sum
+    # of n_w per token occurrence, so the (doc_id, token) hash exchange the
+    # generic bpe_encode wrapper pays for its per-doc output is provably
+    # pure overhead for this global top-40 (§2.3 aggregate before you
+    # shuffle / §1.2 don't compute what you throw away; r13 A/B, oracle
+    # hash-identical). The per-doc surface stays gated through
     # tests/test_bpe.py and the kernels are unchanged.
-    n_part = spark.sparkContext.defaultParallelism
-    vocab = bpe_encode_words(wc.select("w").distinct().repartition(n_part), merges)
-    per_word = wc.join(vocab, "w").select(
-        # explode_OUTER: a plain explode's inferred size(tokens)>0 filter
-        # pushes the merge-fold below the vocab distinct and re-evaluates
-        # it per corpus row (see bpe.bpe_encode; tokens is never null or
-        # empty, so outer == inner). Measured 4.4 -> 1.2 s at x10.
-        F.explode_outer("tokens").alias("token"), "n_w")
+    per_word = bpe_encode_word_counts(wc, merges)
     glob = per_word.groupBy("token").agg(F.sum("n_w").alias("n"))
     w = Window.orderBy(F.desc("n"), "token")
     return (
@@ -3019,19 +3011,9 @@ def q_bpe_encode_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     wf = wc.groupBy("w").agg(F.sum("n_w").alias("freq"))
     merges, _ = bpe_train(None, "text", k=4, word_freqs=wf)
     # same global-aggregation shape as q_bpe_encode_tokens (see the
-    # rationale there): encode the distinct vocab with the RANKED kernel
-    # and sum n_w per exploded token — one corpus-sized exchange removed,
-    # oracle hash-identical
-    from peerdb_spark.functions.bpe import bpe_encode_words
-    n_part = spark.sparkContext.defaultParallelism
-    vocab = bpe_encode_words(wc.select("w").distinct().repartition(n_part),
-                             merges, strategy="ranked")
-    per_word = wc.join(vocab, "w").select(
-        # explode_OUTER: a plain explode's inferred size(tokens)>0 filter
-        # pushes the merge-fold below the vocab distinct and re-evaluates
-        # it per corpus row (see bpe.bpe_encode; tokens is never null or
-        # empty, so outer == inner). Measured 4.4 -> 1.2 s at x10.
-        F.explode_outer("tokens").alias("token"), "n_w")
+    # rationale there), with the vocab encoded by the RANKED kernel
+    from peerdb_spark.functions.bpe import bpe_encode_word_counts
+    per_word = bpe_encode_word_counts(wc, merges, strategy="ranked")
     glob = per_word.groupBy("token").agg(F.sum("n_w").alias("n"))
     w = Window.orderBy(F.desc("n"), "token")
     return (

@@ -174,44 +174,84 @@ def test_merge_with_pk_updates_matches_replay(spark, base, events):
     assert got == replay_with_moves(base, events)
 
 
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+# --- Heavy churn against a model of the reference MERGE --------------------
+# 10 changes per key for keys 1..30, a TOAST-unchanged `x` on every 5th
+# checkpoint, and a final delete for every 7th key. The destination omits
+# keys 5, 7 and 21, so the batch also carries an unmatched TOAST winner and
+# two unmatched deletes.
+
+CHURN_SCHEMA = (
+    "id long, v string, x double, _kind string, _checkpoint_id long,"
+    "_commit_ts timestamp, _txid long, _dst_table string, _unchanged_cols array<string>"
 )
-@given(base=base_rows, events=move_ops)
-def test_merge_agg_with_pk_updates_matches_replay(spark, base, events):
-    """The agg strategy must apply the same split."""
-    dest = (
-        spark.createDataFrame(
-            [(k, v) for k, v in base.items()], "id long, val string"
-        )
-        if base
-        else None
+CHURN_DEST = {i: (f"old{i}", float(i)) for i in range(1, 50) if i not in (5, 7, 21)}
+
+
+def _churn_rows() -> list[dict]:
+    rows = []
+    ck = 0
+    for rep in range(10):
+        for pk in range(1, 31):
+            ck += 1
+            kind = "delete" if (pk % 7 == 0 and rep == 9) else ("insert" if rep == 0 else "update")
+            rows.append(
+                {
+                    "_kind": kind, "_checkpoint_id": ck,
+                    "_commit_ts": TS + dt.timedelta(seconds=ck), "_txid": ck,
+                    "_dst_table": "t", "_unchanged_cols": ["x"] if ck % 5 == 0 else None,
+                    "id": pk, "v": f"new{pk}r{rep}", "x": None if ck % 5 == 0 else float(ck),
+                }
+            )
+    return rows
+
+
+def reference_merge(dest: dict, rows: list[dict], soft: bool) -> dict:
+    """pk -> (v, x) in hard mode, (v, x, deleted) in soft mode: the batch's
+    LWW winner per key; a TOAST-unchanged column of a matched winner takes
+    the destination value; a matched delete drops the row (hard) or flags
+    it keeping the destination values (soft); an unmatched delete is a
+    no-op (hard) or a tombstone INSERT of the source values (soft)."""
+    winners = {}
+    for r in sorted(rows, key=lambda r: (r["_commit_ts"], r["_checkpoint_id"])):
+        winners[r["id"]] = r
+    out = {k: (v, x, False) for k, (v, x) in dest.items()}
+    for pk, w in winners.items():
+        matched = pk in dest
+        if w["_kind"] == "delete":
+            if soft:
+                out[pk] = (*(dest[pk] if matched else (w["v"], w["x"])), True)
+            else:
+                out.pop(pk, None)
+            continue
+        v, x = w["v"], w["x"]
+        if matched and "x" in (w["_unchanged_cols"] or ()):
+            x = dest[pk][1]
+        out[pk] = (v, x, False)
+    return out if soft else {k: r[:2] for k, r in out.items()}
+
+
+def _churn(spark):
+    rows = _churn_rows()
+    dest = spark.createDataFrame(
+        [(k, v, x) for k, (v, x) in CHURN_DEST.items()], "id long, v string, x double"
     )
-    chg_rows = []
-    for i, (kind, key, val) in enumerate(events):
-        if kind == "move":
-            old_pk, new_pk = key
-            chg_rows.append(("update", i, TS + dt.timedelta(seconds=i), i, "t", None,
-                             {"id": old_pk, "val": None}, new_pk, val))
-        else:
-            chg_rows.append((kind, i, TS + dt.timedelta(seconds=i), i, "t", None,
-                             None, key, val))
-    chg = spark.createDataFrame(
-        [
-            {
-                "_kind": k, "_checkpoint_id": c, "_commit_ts": ts, "_txid": tx,
-                "_dst_table": dt_, "_unchanged_cols": u, "_old": old, "id": pk, "val": v,
-            }
-            for (k, c, ts, tx, dt_, u, old, pk, v) in chg_rows
-        ],
-        "id long, val string, _kind string, _checkpoint_id long, _commit_ts timestamp,"
-        "_txid long, _dst_table string, _unchanged_cols array<string>,"
-        "_old struct<id: long, val: string>",
-    )
-    got = {
-        r["id"]: r["val"]
-        for r in N.merge_changes(dest, chg, ["id"], strategy="agg").collect()
-    }
-    assert got == replay_with_moves(base, events)
+    return dest, spark.createDataFrame(rows, CHURN_SCHEMA), rows
+
+
+def test_heavy_churn_merge_hard_delete(spark):
+    dest, chg, rows = _churn(spark)
+    got = {r["id"]: (r["v"], r["x"]) for r in N.merge_changes(dest, chg, ["id"]).collect()}
+    assert got == reference_merge(CHURN_DEST, rows, soft=False)
+
+
+def test_heavy_churn_merge_soft_delete(spark):
+    dest, chg, rows = _churn(spark)
+    out = N.merge_changes(dest, chg, ["id"], soft_delete_col="_del")
+    got = {r["id"]: (r["v"], r["x"], r["_del"]) for r in out.collect()}
+    assert got == reference_merge(CHURN_DEST, rows, soft=True)
+
+
+def test_heavy_churn_merge_bootstrap(spark):
+    _, chg, rows = _churn(spark)
+    got = {r["id"]: (r["v"], r["x"]) for r in N.merge_changes(None, chg, ["id"]).collect()}
+    assert got == reference_merge({}, rows, soft=False)

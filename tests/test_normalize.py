@@ -119,14 +119,12 @@ def test_merge_soft_delete_unmatched_delete_inserts_tombstone(spark):
     # destination materializes as a tombstone row, not a no-op
     dest = spark.createDataFrame([(1, "one")], "id long, val string")
     chg = _chg(spark, [("delete", 1, 9, "ghost", None)])
-    for strat in ("join", "agg"):
-        out = _state(
-            N.merge_changes(dest, chg, ["id"], soft_delete_col="_deleted",
-                            synced_at_col="_synced", strategy=strat)
-        )
-        assert out[9]["_deleted"] is True and out[9]["val"] == "ghost", strat
-        assert out[9]["_synced"] is not None, strat
-        assert out[1]["_deleted"] is False, strat
+    out = _state(
+        N.merge_changes(dest, chg, ["id"], soft_delete_col="_deleted", synced_at_col="_synced")
+    )
+    assert out[9]["_deleted"] is True and out[9]["val"] == "ghost"
+    assert out[9]["_synced"] is not None
+    assert out[1]["_deleted"] is False
     # hard-delete mode: still a no-op
     out = _state(N.merge_changes(dest, chg, ["id"]))
     assert set(out) == {1}

@@ -247,28 +247,42 @@ MAX_EXCHANGES = {
 }
 
 
-def check_agg_merge_single_exchange(spark) -> list[str]:
-    """The agg-strategy merge must stay a single exchange with no join —
-    the property that halves shuffle count on the CDC pipeline hot path."""
-    from pyspark.sql import functions as F
-
+def merge_plan(spark, seed_break: bool = False) -> str:
+    """Executed plan of the normalize MERGE as merge_into_table runs it: the
+    batch split and LWW-deduped first, then merge_changes(dedup=False).
+    `seed_break` plants the two regressions the check exists to catch — a
+    checkpointed (ExistingRDD) destination and an extra round-robin
+    exchange on the change side."""
     from peerdb_spark import normalize as N
 
-    dest = spark.range(100).select(F.col("id"), F.lit("x").alias("v"))
-    chg = spark.range(50).select(
-        F.col("id"), F.lit("y").alias("v"), F.lit("update").alias("_kind"),
-        F.col("id").alias("_checkpoint_id"), F.current_timestamp().alias("_commit_ts"),
+    # computed keys: a bare range's id is already range-partitioned, which
+    # would hide the window's exchange
+    dest = spark.range(100).selectExpr("id * 7 % 100 AS id", "'x' AS v")
+    chg = spark.range(50).selectExpr(
+        "id * 2 AS id", "'y' AS v", "'update' AS _kind", "id AS _checkpoint_id",
+        "current_timestamp() AS _commit_ts",
     )
-    plan = (
-        N.merge_changes(dest, chg, ["id"], strategy="agg")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    msgs = []
-    msgs.append(
-        ("ok" if plan.count("Exchange") <= 1 else "FAIL")
-        + f": agg merge exchanges {plan.count('Exchange')} <= 1"
-    )
-    msgs.append(("ok" if "Join" not in plan else "FAIL") + ": agg merge has no join")
+    deduped = N.latest_changes(N.split_pk_updates(chg, ["id"]), ["id"])
+    if seed_break:
+        dest, deduped = dest.localCheckpoint(), deduped.repartition(3)
+    merged = N.merge_changes(dest, deduped, ["id"], dedup=False)
+    return merged._jdf.queryExecution().executedPlan().toString()
+
+
+def check_merge_plan(plan: str) -> list[str]:
+    """The MERGE stays two exchanges, one per join side (the join reuses the
+    dedup window's pk partitioning), over a Python-free, checkpoint-free
+    plan."""
+    nexch = plan.count("Exchange")
+    msgs = [("ok" if nexch == 2 else "FAIL") + f": merge exchanges {nexch} == 2 (one per side)"]
+    for label, pat, want in [
+        ("LWW window on the change side", r"\bWindow\b", True),
+        ("full-outer pk join", r"(SortMergeJoin|ShuffledHashJoin).*FullOuter", True),
+        ("no ExistingRDD", r"ExistingRDD", False),
+        ("no python node", r"Python|InPandas", False),
+    ]:
+        ok = bool(re.search(pat, plan)) == want
+        msgs.append(f"{'ok' if ok else 'FAIL'}: {label}")
     return msgs
 
 
@@ -375,8 +389,8 @@ def main() -> int:
     spark = get_spark("audit_plans", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     failures = 0
-    print("merge_changes(strategy='agg'):")
-    for m in check_agg_merge_single_exchange(spark):
+    print("merge_changes (as merge_into_table calls it, dedup=False):")
+    for m in check_merge_plan(merge_plan(spark)):
         if m.startswith("FAIL"):
             failures += 1
         print(f"  {m}")
